@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,6 +12,20 @@ import org.apache.spark.sql.types._
   *
   * Reference data model: tables are directories of parquet read with
   * `spark.read.parquet` (/root/reference/src/scripts/save_mes_geo.py:30-31).
+  *
+  * Every parquet table read in the engine (the loaders here,
+  * `Pipeline.interim`, the `Sinks` root reads) goes through [[parquet]],
+  * which resolves each table's schema once per file version, the way a
+  * metastore does: the cache key is the qualified path, the sorted leaf
+  * files as (path, length, mtime) listed through the path's Hadoop
+  * FileSystem, and the session settings that change inference
+  * (`InferenceConfs`). A repeat load of an unchanged table runs no
+  * schema-inference job; a changed file re-infers. The cache lives in the
+  * JVM only, holds at most 256 entries (`SchemaCacheEntries`, least
+  * recently used evicted first), never stores a failed inference and has
+  * no switch. The schema is always the one inferred from the file version
+  * read, so the `events.ts` encoding branch and the [[fixtureProblems]]
+  * gate see exactly what Spark infers.
   */
 object Tables {
   /** Scan fan-out (OPTIMIZATION_r18, guide §2.5 "input skew — one huge
@@ -42,25 +57,19 @@ object Tables {
     "events" -> "event_id", "documents" -> "doc_id",
     "embeddings" -> "vec_id")
 
-  private def fanOut(spark: SparkSession, df: DataFrame, path: String,
+  private def fanOut(spark: SparkSession, df: DataFrame, leaves: Seq[Leaf],
                      key: Option[String], byDefault: Boolean): DataFrame = key match {
     case Some(k) if spark.conf
         .get("spark.graft.scan.fanout", byDefault.toString).toBoolean =>
       val par = spark.sparkContext.defaultParallelism
-      // A table path may be a single parquet FILE (the driver's testdata
-      // layout) or a directory of part files (Spark-written layout).
-      // java.io.File.listFiles() returns null for a regular file, so the
-      // file case must be treated as its own one-element listing — the r18
-      // version missed this and the fan-out was dead code on exactly the
-      // layout it targeted (ADVICE r18 medium).
-      val root = new java.io.File(path)
-      val files: Seq[java.io.File] =
-        if (root.isFile) Seq(root)
-        else Option(root.listFiles())
-          .map(_.toSeq.filter(f => f.isFile && !f.getName.startsWith("_") &&
-            !f.getName.startsWith(".")))
-          .getOrElse(Seq.empty)
-      val bytes = files.map(_.length()).sum
+      // sized from the resolver's leaf listing (Hadoop FileSystem, so
+      // file:/hdfs: URIs size as well as plain local paths); a single-file
+      // table is its own one-leaf listing. Hidden/metadata files
+      // (`_SUCCESS`, `.crc`) are not scanned and do not count.
+      val sizes = leaves.filter { l =>
+        val name = new Path(l.path).getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }.map(_.length)
       val minBytes = spark.conf
         .get("spark.graft.scan.fanout.minBytes", (512L * 1024).toString).toLong
       val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes.max(1L)
@@ -68,12 +77,91 @@ object Tables {
       // files are at best one task per maxPartitionBytes-sized split;
       // ceiling division — floor under-counted near the boundary (a file
       // of 2.3 splits is 3 tasks, not 2; ADVICE r18 low)
-      val estTasks = files.map(f => (f.length() + maxSplit - 1) / maxSplit).sum
-      if (bytes >= minBytes && estTasks * 2 <= par)
+      val estTasks = sizes.map(len => (len + maxSplit - 1) / maxSplit).sum
+      if (sizes.sum >= minBytes && estTasks * 2 <= par)
         df.repartition(par, org.apache.spark.sql.functions.col(k))
       else df
     case _ => df
   }
+
+  /** One leaf file of a parquet table: qualified path, length, mtime. */
+  private final case class Leaf(path: String, length: Long, mtime: Long)
+
+  /** Schema-cache key: the qualified root paths, every leaf file under
+    * them (sorted), and the session settings that change what parquet
+    * schema inference returns. */
+  private final case class SchemaKey(roots: Seq[String], leaves: Seq[Leaf],
+                                     conf: Seq[Option[String]])
+
+  /** Session settings that change the inferred schema of an unchanged file
+    * set (timestamp encodings, binary/int96 mapping, footer merging, name
+    * resolution, partition-value typing). */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** Entry bound of the schema cache (least recently used entries go
+    * first). A lake refresh adds one entry per rewritten table version. */
+  private val SchemaCacheEntries = 256
+
+  private val schemaCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+        size() > SchemaCacheEntries
+    })
+
+  /** Every leaf file under `paths` through each path's Hadoop FileSystem,
+    * sorted; the qualified roots alongside. None when a path does not exist
+    * (or is a glob): the caller then reads uncached and Spark reports the
+    * path its usual way. */
+  private def listLeaves(spark: SparkSession,
+                         paths: Seq[String]): Option[(Seq[String], Seq[Leaf])] = {
+    val conf = spark.sessionState.newHadoopConf()
+    def walk(fs: FileSystem, st: FileStatus): Seq[Leaf] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk(fs, _))
+      else Seq(Leaf(st.getPath.toString, st.getLen, st.getModificationTime))
+    try {
+      val listed = paths.map { p =>
+        val hp = new Path(p)
+        val fs = hp.getFileSystem(conf)
+        val root = fs.makeQualified(hp)
+        root.toString -> walk(fs, fs.getFileStatus(root))
+      }
+      Some((listed.map(_._1), listed.flatMap(_._2).sortBy(_.path)))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Reads parquet `paths` with the schema resolved once per file version
+    * (see the object doc). On a hit the read carries the cached schema and
+    * runs no Spark job; on a miss Spark infers it (one job) and the result
+    * is stored; a failed inference throws before anything is stored. Any
+    * changed, added or removed file changes the key, so the schema always
+    * comes from the file version read (a rewrite to the same length within
+    * the filesystem's mtime granularity is the one change it cannot see,
+    * as with any (length, mtime) file cache). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = resolve(spark, paths)._1
+
+  /** [[parquet]] plus the leaf listing it keyed on (empty when unlisted). */
+  private def resolve(spark: SparkSession, paths: Seq[String]): (DataFrame, Seq[Leaf]) =
+    listLeaves(spark, paths) match {
+      case None => (spark.read.parquet(paths: _*), Nil)
+      case Some((roots, leaves)) =>
+        val key = SchemaKey(roots, leaves, InferenceConfs.map(spark.conf.getOption))
+        val df = Option(schemaCache.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+          case None =>
+            val inferred = spark.read.parquet(paths: _*)
+            schemaCache.put(key, inferred.schema)
+            inferred
+        }
+        (df, leaves)
+    }
 
   /** Load a table; `fanned = true` opts the scan into the fan-out above.
     *
@@ -89,8 +177,8 @@ object Tables {
     * false = kill switch; unset = per-call-site policy). */
   def table(spark: SparkSession, dir: String, name: String,
             fanned: Boolean = false): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    fanOut(spark, spark.read.parquet(path), path, FanoutKeys.get(name), fanned)
+    val (df, leaves) = resolve(spark, Seq(s"$dir/$name.parquet"))
+    fanOut(spark, df, leaves, FanoutKeys.get(name), fanned)
   }
 
   def lineitem(spark: SparkSession, dir: String, fanned: Boolean = false): DataFrame =

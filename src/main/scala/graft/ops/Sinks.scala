@@ -3,10 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, shiftleft, shiftright}
 import org.apache.spark.sql.types.StructType
+import graft.Tables
 
 /** Parquet sink/scan operators — the reference's storage layer (S1–S5 in
   * SURVEY.md §2.1): idempotent full-overwrite marts and hive-partitioned
-  * layouts with pruning on read.
+  * layouts with pruning on read. Table-root reads resolve their schema
+  * through `Tables.parquet` (once per file version); reads of a staging
+  * dir this object has just written read it directly.
   */
 object Sinks {
 
@@ -27,13 +30,13 @@ object Sinks {
     * (save_mes_geo.py:16-22, S2/S3) with the declarative form. */
   def readPartition(spark: SparkSession, path: String, partitionCol: String,
                     value: Any): DataFrame =
-    spark.read.parquet(path).where(col(partitionCol) === value)
+    Tables.parquet(spark, path).where(col(partitionCol) === value)
 
   /** Explicit multi-path scan (reference S2: `spark.read.parquet(*paths)`
     * over enumerated `date=` dirs, save_mes_geo.py:31) — for lakes without
     * a uniform hive layout where filter-based pruning can't apply. */
   def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+    Tables.parquet(spark, paths: _*)
 
   /** The reference's N-day sliding window (save_mes_geo.py:16-22 builds
     * `date=` paths for [date−depth+1, date]) as a declarative
@@ -43,7 +46,7 @@ object Sinks {
                      endDate: String, depthDays: Int): DataFrame = {
     val end = java.time.LocalDate.parse(endDate)
     val start = end.minusDays(depthDays - 1L)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .where(col(partitionCol).between(start.toString, end.toString))
   }
 
@@ -208,7 +211,7 @@ object Sinks {
   def deleteWhere(spark: SparkSession, path: String, pred: Column,
                   partitionCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val snap = spark.read.parquet(path)
+    val snap = Tables.parquet(spark, path)
     val affected = snap.where(pred)
       .select(partitionCols.map(col): _*).distinct().collect()
     if (affected.isEmpty) return 0L
@@ -271,7 +274,7 @@ object Sinks {
     * narrow round-robin repartition (no key shuffle). Returns output file
     * count. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long): Int = {
-    val df = spark.read.parquet(path)
+    val df = Tables.parquet(spark, path)
     val rows = df.count()
     val nFiles = math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
     val tmp = path.stripSuffix("/") + "__compact_tmp"

@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   *     unchanged with fan-out on;
   *  3. the ceiling-division estimate does not over-trigger near the split
   *     boundary: files of ~1.5 splits each count as 2 tasks, not 1, so a
-  *     scan already near the core count is left alone.
+  *     scan already near the core count is left alone;
+  *  4. a table addressed by a `file:` URI is sized through the Hadoop
+  *     FileSystem like any other path and fans out (a `java.io.File`
+  *     listing sees nothing there, so the fan-out never fired).
   */
 class FanoutSpec extends SparkSpec {
 
@@ -77,6 +80,19 @@ class FanoutSpec extends SparkSpec {
         "two small part files estimate 2 tasks on 4 cores — should fan out")
       val plain = spark.read.parquet(s"$base/documents.parquet")
       assert(sortedRows(viaTable) == sortedRows(plain))
+    }
+  }
+
+  test("fan-out fires on a directory-layout table loaded through a file: URI") {
+    val base = Files.createTempDirectory("graft-fanout-uri").toString
+    writeDocs(base, 1000, 2)
+    withConf("spark.graft.scan.fanout" -> "true",
+        "spark.graft.scan.fanout.minBytes" -> "1") {
+      val viaUri = Tables.table(spark, s"file://$base", "documents")
+      assert(hasFanoutExchange(viaUri),
+        "a file: URI table must be sized through its FileSystem and fan out")
+      val plain = spark.read.parquet(s"$base/documents.parquet")
+      assert(sortedRows(viaUri) == sortedRows(plain))
     }
   }
 

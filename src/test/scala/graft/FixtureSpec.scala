@@ -112,6 +112,23 @@ class FixtureSpec extends SparkSpec {
     assert(problems.isEmpty, problems.mkString("; "))
   }
 
+  test("genuine NANOS footer re-read without nanosAsLong raises the actionable error") {
+    val base = Files.createTempDirectory("graft-nanos-flag").toString
+    writeGenuineNanos(base)
+    val flag = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.getOption(flag)
+    try {
+      spark.conf.set(flag, "true")
+      assert(Tables.events(spark, base).schema("ts").dataType == TimestampType)
+      // same file, same session: the schema resolved under the flag must
+      // not be reused once the flag is gone
+      spark.conf.unset(flag)
+      val e = intercept[IllegalArgumentException](Tables.events(spark, base))
+      assert(e.getMessage.contains("TIMESTAMP(NANOS)") &&
+        e.getMessage.contains("nanosAsLong"), e.getMessage)
+    } finally old.fold(spark.conf.unset(flag))(spark.conf.set(flag, _))
+  }
+
   test("Tables.events rejects an unsupported ts type with an actionable error") {
     val dir = Files.createTempDirectory("graft-fixture-bad").toString
     writeTwin(dir, (col("us") / 1000.0).as("ts")) // double — no valid reading
